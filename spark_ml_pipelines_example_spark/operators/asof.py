@@ -532,7 +532,7 @@ def asof_join_nearest_bucketed(
 
     Parity with asof_join_nearest is property-tested on randomized
     corpora, hot key included (tests/test_round8.py). MEASURED TRADE
-    (tools/probe_asof_skew.py, BASELINE.md round-8 rows): the dual
+    (BASELINE.md, "Nearest pair under the same hot key"): the dual
     carry is still a SCALAR per (key, bucket), so unlike the k-nearest
     ARRAY carry this variant is ~1.4× FASTER than the unbucketed plan
     already at the 10×/30× half-corpus hot key while bounding the hot
@@ -635,11 +635,12 @@ def asof_join_topk_bucketed(
     Parity with asof_join_topk is property-tested on randomized corpora
     (tests/test_round7.py).
 
-    MEASURED TRADE (tools/probe_asof_skew.py, BASELINE.md): this plan
-    pays a ~2.3-2.8x constant over the unbucketed k-nearest at fixture
-    scale (6 scans / 11 exchanges vs 2 / 4 — the ref numbering, tails,
-    and final resolve each re-derive the bucketed ref frame) while
-    bounding the hot task at hot_rows/|buckets| instead of hot_rows.
+    MEASURED TRADE (BASELINE.md, "k-nearest pair under the same hot
+    key"): this plan pays a ~2.3-2.8x constant over the unbucketed
+    k-nearest at fixture scale (6 scans / 11 exchanges vs 2 / 4 — the
+    ref numbering, tails, and final resolve each re-derive the bucketed
+    ref frame) while bounding the hot task at hot_rows/|buckets|
+    instead of hot_rows.
     Use it ONLY when q_dq_join_key_skew reports a key hot enough that
     the unbucketed variant's single unsplittable window task dominates
     the stage (at 10x/30x fixture scale no task is near that regime, so

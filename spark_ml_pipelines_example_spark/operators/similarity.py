@@ -50,10 +50,10 @@ N_PROBE = 6
 TOP_K = 10
 # Adaptive-k target: soft-assigned rows per cell (SOFT_CELLS probes per
 # vector). Fixed k is the Σcell² trap — cells grow linearly with the
-# corpus, so within-cell pair work grows QUADRATICALLY (measured in the
-# sf1 probe, tools/scale_probe_sf1.py: 10× corpus → 102× pairs at fixed
-# k=16). Scaling k with the corpus bounds cell size, making per-cell
-# GEMMs constant-cost and total pair work linear (same probe: 10.4×).
+# corpus, so within-cell pair work grows QUADRATICALLY (BASELINE.md,
+# "sf1 scale probe": 10× corpus → 102× pairs at fixed k=16). Scaling k
+# with the corpus bounds cell size, making per-cell GEMMs constant-cost
+# and total pair work linear (same probe: 10.4×).
 # At every driver/test SF (≤2000 vectors) adaptive k == N_CELLS, so
 # recall floors and cached indexes are unchanged there.
 TARGET_SOFT_ROWS_PER_CELL = 500

@@ -1987,7 +1987,7 @@ def q_ml_fpgrowth(spark, sf_dir):
     support floor prunes sub-floor items, singles come from the item
     support aggregate, pairs from one within-basket equi-self-join.
     Output proven row-identical to the MLlib PFP path it replaced
-    (interleaved A/B, tools/ab_fpgrowth.py: 5.4 → 2.3 s min-of-5 at
+    (interleaved A/B, OPTIMIZATION_r12.md §2: 5.4 → 2.3 s min-of-5 at
     sf0.1) — the PFP mining passes (genFreqItems scan + conditional-tree
     shuffle + RDD mining) were 3+ s of work the declared ≤2-itemset
     result never consumed. The MLlib PFP surface (incl. size-3+ mining

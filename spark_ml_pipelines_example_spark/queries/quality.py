@@ -1460,11 +1460,12 @@ def q_dq_join_key_skew(spark, sf_dir):
     (the frame-exclusion family, queries/windows.py) → the
     group-collapse shape of q_win_frame_groups — per-key totals via a
     combinable groupBy + broadcast join-back, no Window at all
-    (measured 1.5-2.1× at the 30× hot-key probe,
-    tools/probe_window_skew.py). One combinable hash aggregate to |keys| rows, a broadcast
-    1-row total, and a TakeOrderedAndProject top-10 — no windows, no
-    second fact scan. Both ratios are a SINGLE IEEE division of exact
-    int64s (the multiply stays integer), so the doubles are bit-identical
+    (measured 1.5-2.1× at the 30× hot-key probe, BASELINE.md
+    "Window frame-exclusion under a hot key"). One combinable hash
+    aggregate to |keys| rows, a broadcast 1-row total, and a
+    TakeOrderedAndProject top-10 — no windows, no second fact scan.
+    Both ratios are a SINGLE IEEE division of exact int64s (the
+    multiply stays integer), so the doubles are bit-identical
     cross-engine."""
     ev = t(spark, sf_dir, "events")
     keyed = ev.groupBy("user_id").agg(F.count("*").alias("cnt"))

@@ -4,7 +4,7 @@ Every operator the engine claims (SURVEY §2.2) registers here as a
 ``QuerySpec``: a PySpark callable ``(spark, sf_dir) -> DataFrame`` plus,
 when SQL-expressible, the DuckDB oracle SQL the driver hash-checks it
 against. ``__spark_entry__.queries()`` / ``oracle_sql()`` are thin views
-over this registry.
+over this registry, which ``load_all()`` returns sorted by query name.
 
 Hash-match discipline (SURVEY §2.4) enforced by convention throughout the
 query modules:
@@ -171,339 +171,10 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
     return deco
 
 
-# The external driver hash-checks at most ~50 registry entries per round, in
-# dict order. Cumulative driver coverage after rounds 1+2: 96 of 311 queries
-# (90 pass + 6 rows-only, 0 failures). Round 3 rotates the window onto 58
-# never-driver-checked SQL-oracled queries, family-prioritized (all 21
-# TPC-H shapes first, then the events/dq/curation/window analytics
-# families), so the driver's budget lands entirely on queries with no hard
-# row yet. Remaining never-checked SQL queries follow (rounds 4+ rotation
-# fodder), then the never-checked rows-only ops, then every
-# already-driver-verified query (regression tail). Rotate again each round
-# until all 311 have a hard driver row.
-_DRIVER_PRIORITY: tuple[str, ...] = (
-    # (a) round-3 window: never-driver-checked, SQL-oracled, family-ranked
-    "q_tpch_q10",
-    "q_tpch_q11",
-    "q_tpch_q12",
-    "q_tpch_q13",
-    "q_tpch_q14",
-    "q_tpch_q15",
-    "q_tpch_q16",
-    "q_tpch_q17",
-    "q_tpch_q18",
-    "q_tpch_q19",
-    "q_tpch_q2",
-    "q_tpch_q20",
-    "q_tpch_q21",
-    "q_tpch_q22",
-    "q_tpch_q3",
-    "q_tpch_q4",
-    "q_tpch_q5",
-    "q_tpch_q6",
-    "q_tpch_q7",
-    "q_tpch_q8",
-    "q_tpch_q9",
-    "q_events_abtest",
-    "q_events_anomaly",
-    "q_events_attribution",
-    "q_events_churn",
-    "q_events_cohort_ltv",
-    "q_events_cuped",
-    "q_events_funnel",
-    "q_events_funnel_lag",
-    "q_events_funnel_windowed",
-    "q_events_heatmap",
-    "q_events_new_vs_repeat",
-    "q_events_power_analysis",
-    "q_events_purchase_paths",
-    "q_events_retention",
-    "q_events_rfm",
-    "q_events_rolling_dau",
-    "q_events_seasonality",
-    "q_events_session_metrics",
-    "q_events_stickiness",
-    "q_events_survival",
-    "q_events_transitions",
-    "q_events_user_growth",
-    "q_dq_benford",
-    "q_dq_checks",
-    "q_dq_drift_features",
-    "q_dq_drift_ks",
-    "q_dq_drift_psi",
-    "q_dq_error_budget",
-    "q_dq_freshness",
-    "q_dq_table_fingerprint",
-    "q_curate_erasure",
-    "q_curate_mix_temperature",
-    "q_curate_pseudonymize",
-    "q_win_capped_cumsum",
-    "q_win_distribution",
-    "q_win_ewma",
-    "q_win_frame_range",
-    # (b) rounds-4+ rotation fodder: remaining never-checked SQL-oracled
-    "q_win_frame_rows",
-    "q_win_funnel",
-    "q_win_gaps_islands",
-    "q_win_hampel",
-    "q_win_moving_median",
-    "q_win_ntile",
-    "q_win_period_growth",
-    "q_win_ranking",
-    "q_win_rolling_time",
-    "q_win_topk_per_group",
-    "q_win_value_functions",
-    "q_text_bigram_lm",
-    "q_text_chunk",
-    "q_text_contamination",
-    "q_text_domain_cap",
-    "q_text_entropy",
-    "q_text_filter_cascade",
-    "q_text_fingerprint",
-    "q_text_langid",
-    "q_text_pii_scrub",
-    "q_text_pmi_collocations",
-    "q_text_quality_score",
-    "q_text_repetition",
-    "q_text_tfidf_topterms",
-    "q_text_tfidf_weighted",
-    "q_text_tokenize_stats",
-    "q_text_unigram_logprob",
-    "q_text_url_canonical",
-    "q_text_vocab_coverage",
-    "q_dedup_clusters",
-    "q_dedup_containment",
-    "q_dedup_incremental",
-    "q_dedup_incremental_neardup",
-    "q_dedup_paragraph",
-    "q_dedup_prefix_filter",
-    "q_dedup_snm",
-    "q_dedup_storage_impact",
-    "q_dedup_survivorship",
-    "q_ml_auc",
-    "q_ml_calibration",
-    "q_ml_class_metrics",
-    "q_ml_evaluator",
-    "q_ml_feature_hashing",
-    "q_ml_fpgrowth",
-    "q_ml_knn_classifier",
-    "q_ml_lift_table",
-    "q_ml_ndcg",
-    "q_ml_onehot",
-    "q_ml_pit_features",
-    "q_ml_pr_auc",
-    "q_ml_quantile_discretizer",
-    "q_ml_scaler",
-    "q_ml_string_indexer",
-    "q_ml_target_encode",
-    "q_ml_vector_assembler",
-    "q_agg_abc_xyz",
-    "q_agg_copurchase",
-    "q_agg_corr_matrix",
-    "q_agg_gini",
-    "q_agg_incremental_maintenance",
-    "q_agg_mad_outliers",
-    "q_agg_mode_median",
-    "q_agg_moments",
-    "q_agg_neyman_allocation",
-    "q_agg_ols_trend",
-    "q_agg_pareto",
-    "q_agg_percentile_disc",
-    "q_agg_price_index",
-    "q_agg_theilsen",
-    "q_agg_weighted_median",
-    "q_join_bloom_runtime",
-    "q_join_bucketed_colocated",
-    "q_join_dpp_prune",
-    "q_join_interval_overlap",
-    "q_join_lateral_topk",
-    "q_join_nullsafe",
-    "q_join_range_bucketed",
-    "q_join_salted_skew",
-    "q_join_spatial_grid",
-    "q_scan_column_prune",
-    "q_scan_csv_schema",
-    "q_scan_file_provenance",
-    "q_scan_json_corrupt",
-    "q_scan_parquet",
-    "q_scan_schema_evolution",
-    "q_scan_text_lines",
-    "q_scan_text_log",
-    "q_sink_csv_roundtrip",
-    "q_sink_json_roundtrip",
-    "q_sink_orc_roundtrip",
-    "q_sink_parquet_roundtrip",
-    "q_sink_partitioned_prune",
-    "q_set_intersect_except",
-    "q_set_union_all",
-    "q_set_unpivot",
-    "q_subquery_exists",
-    "q_subquery_not_in",
-    "q_subquery_scalar",
-    "q_sim_cosine_topk",
-    "q_sim_knn_all",
-    "q_sim_pairwise_sample",
-    "q_sim_random_projection",
-    "q_ts_changepoint",
-    "q_ts_decompose",
-    "q_ts_forecast_naive",
-    "q_ts_interpolate",
-    "q_ts_ses",
-    "q_graph_bfs_hops",
-    "q_graph_pagerank",
-    "q_graph_treepath",
-    "q_graph_triangles",
-    "q_stream_interval_join",
-    "q_stream_session_dynamic",
-    "q_stream_stateful_session",
-    "q_stream_static_join",
-    "q_diff_tables",
-    "q_embed_quantize",
-    "q_fn_collation",
-    "q_fn_try_safe",
-    "q_fn_variant",
-    "q_fn_winsorize",
-    "q_group_normalize",
-    "q_layout_compact",
-    "q_layout_zorder",
-    "q_limit_topk",
-    "q_merge_upsert",
-    "q_mix_sources",
-    "q_multimodal_framesample",
-    "q_multimodal_manifest",
-    "q_pack_padding_waste",
-    "q_pack_shards",
-    "q_profile_orders",
-    "q_sample_reservoir_group",
-    "q_sample_stratified",
-    "q_sample_weighted",
-    "q_scd2_lookup",
-    "q_seq_pattern_match",
-    "q_shuffle_global",
-    "q_sort_multikey",
-    "q_split_hash",
-    "q_sql_recursive_cte",
-    "q_udaf_second_largest",
-    "q_udtf_chunk_table",
-    # (c) never-checked rows-only ops (driver records weaker rows-only check)
-    "q_agg_hll_merge",
-    "q_agg_sketch_rollup",
-    "q_dedup_embedding_cells",
-    "q_events_markov_attribution",
-    "q_ml_cross_validation",
-    "q_ml_isotonic",
-    "q_ml_kmeans",
-    "q_ml_rf_pipeline",
-    "q_ml_train_test_split",
-    "q_multimodal_decode",
-    "q_multimodal_phash",
-    "q_sim_ann_ivf",
-    "q_sim_ann_ivf_index",
-    "q_stream_drift_monitor",
-    # (d) regression tail: every query with a green driver row from r1/r2
-    "q_agg_approx_distinct",
-    "q_agg_approx_percentile",
-    "q_agg_argmax",
-    "q_agg_bitmap_distinct",
-    "q_agg_bool",
-    "q_agg_chisq",
-    "q_agg_collect",
-    "q_agg_concentration",
-    "q_agg_confusion_accuracy",
-    "q_agg_cube",
-    "q_agg_distinct",
-    "q_agg_global",
-    "q_agg_groupby",
-    "q_agg_grouping_sets",
-    "q_agg_having",
-    "q_agg_histogram",
-    "q_agg_item_cosine",
-    "q_agg_label_encode",
-    "q_agg_mutual_info",
-    "q_agg_percentile",
-    "q_agg_pivot",
-    "q_agg_proration",
-    "q_agg_rollup",
-    "q_agg_skyline",
-    "q_agg_stats",
-    "q_agg_welch_ttest",
-    "q_dedup_editdistance",
-    "q_dedup_embedding",
-    "q_dedup_exact",
-    "q_dedup_minhash",
-    "q_dedup_ngram_jaccard",
-    "q_dedup_simhash",
-    "q_dedup_substring_spans",
-    "q_embed_drift",
-    "q_events_interarrival",
-    "q_events_lifecycle",
-    "q_events_shapley",
-    "q_filter_boolean",
-    "q_filter_comparison",
-    "q_filter_conditional",
-    "q_filter_in_between_like",
-    "q_fn_array",
-    "q_fn_bitwise",
-    "q_fn_cast_decimal",
-    "q_fn_date",
-    "q_fn_hash",
-    "q_fn_json",
-    "q_fn_map_struct",
-    "q_fn_math",
-    "q_fn_null_semantics",
-    "q_fn_string",
-    "q_fn_timestamp",
-    "q_fn_trig",
-    "q_fn_url",
-    "q_fn_xml",
-    "q_graph_degrees",
-    "q_graph_link_prediction",
-    "q_join_asof_event",
-    "q_join_broadcast",
-    "q_join_cross",
-    "q_join_fifo_match",
-    "q_join_inner_equi",
-    "q_join_left_right_full",
-    "q_join_multiway",
-    "q_join_nearest_event",
-    "q_join_semi_anti",
-    "q_join_theta_range",
-    "q_ml_info_gain",
-    "q_ml_linreg_normal",
-    "q_ml_naive_bayes",
-    "q_ml_pca",
-    "q_pack_ffd",
-    "q_project_rename",
-    "q_scd2_history",
-    "q_self_join_dedup_pairs",
-    "q_set_bag_ops",
-    "q_stream_gapfill",
-    "q_stream_late_dedup",
-    "q_stream_milestones",
-    "q_stream_session",
-    "q_stream_sliding",
-    "q_stream_tumbling",
-    "q_text_novelty",
-    "q_text_readability",
-    "q_ts_autocorr",
-    "q_ts_cusum",
-    "q_ts_mann_kendall",
-    "q_ts_ohlc",
-    "q_ts_peaks",
-    "q_ts_rsi",
-    "q_ts_runs_test",
-    "q_win_analytic",
-    "q_win_concurrency",
-    "q_win_drawdown",
-    "q_win_rolling_corr",
-    "q_win_streak",
-)
-
-
 def load_all() -> dict[str, QuerySpec]:
     """Import every query module (side effect: registration) and return
-    the full registry, ordered so the driver's per-round check budget lands
-    on the queries that most need a fresh correctness row."""
+    the full registry sorted by query name. It reads no file, and the
+    order does not depend on which modules were imported first."""
     from . import (  # noqa: F401
         aggregates,
         analytics,
@@ -538,60 +209,12 @@ def load_all() -> dict[str, QuerySpec]:
     from ..operators import similarity as _op_similarity  # noqa: F401
     from ..operators import skew as _op_skew  # noqa: F401
 
-    return _rotate_for_driver(REGISTRY)
+    return dict(sorted(REGISTRY.items()))
 
-
-# Round-6 window pin (VERDICT r5 "Next round: do this" #1): front the
-# queries never checked by the driver NOR any judge's independent sample
-# (the r4 judge sampled 38, the r5 judge sampled a disjoint 38 — both
-# samples live in .scratch/driver_sim.json history and are excluded
-# here). Priority per the verdict: the sink/scan format matrix (a user's
-# first contact surface), the ts recursive-CTE replays, subqueries, the
-# remaining stream twins, then sql-scripting / set / fn / cdc-merge
-# families. Names listed here sort before everything else within the
-# never-checked block; once they earn a green hard row the
-# self-maintaining rotation retires them into the regression tail.
-_WINDOW_PIN: tuple[str, ...] = (
-    # round-12 (VERDICT r11 #1 and #7): an optimization round's rewrites
-    # must be driver-recertified at sf0.01 THE ROUND THEY LAND — the r11
-    # rotation sent the whole window to the r2/r3-vintage tail and missed
-    # every r11-touched query. Pin every query whose code path changed in
-    # r11 or r12 (directly or via the shared _kmx/IVF fit and routing
-    # spine); the ~29 remaining slots flow to the self-maintaining recert
-    # rotation, which still covers the 13-name pre-r4 tail. Pins retire
-    # next round once CORRECTNESS_r12 records their green rows.
-    # -- r12-touched --
-    "q_ml_fpgrowth",  # direct 1/2-itemset enumeration (r11: persist)
-    "q_dedup_minhash",  # size prefilter + union-free confirm
-    "q_stream_drift_monitor",  # driver PSI replay + pyarrow appends
-    "q_text_bpe_train",  # driver merge-round replay
-    "q_text_bpe_apply",
-    "q_text_bpe_fertility",
-    "q_ml_knn_classifier_ivf",  # driver GEMM probe-cell crank (r11: Arrow scorer)
-    "q_sim_hard_negatives",  # same routing spine (r11: Arrow scorer)
-    "q_sim_ann_ivfpq_eval",  # same routing spine
-    "q_graph_pagerank",  # driver-replayed power iterations
-    "q_ml_tree_depth2_exact",  # joint-grid collect + driver split replay
-    "q_ml_cv_stumps_exact",  # same playbook
-    "q_stream_state_reader",  # construction now deferred (results unchanged)
-    # -- r11-touched, never driver-recertified on the new code --
-    "q_ml_kmeans_exact",
-    "q_dedup_embedding_cells",
-    "q_dedup_semantic",
-    "q_ml_pca_power_exact",
-    "q_ml_logreg_exact",
-    "q_ml_conformal_exact",
-    "q_ml_fairness_audit",
-    "q_graph_label_propagation",
-    "q_sim_maxsim",
-    "q_sim_knn_all",
-    "q_embed_pq_codes",
-    "q_ml_kmeans",  # rows-only; r11 invariant fix (rides the SQL block)
-)
 
 # VERDICT r5 #8: every rows-only-by-contract query carries a PINNED
 # row-count range AT sf0.01 — the driver's contract SF, the only scale
-# it records rows-only counts at (tests/test_registry_rotation.py
+# it records rows-only counts at (tests/test_artifact_sync.py
 # asserts the declared set matches the registry's rows-only set and that
 # every committed artifact row lands in range; driver_sim enforces the
 # range live at sf0.01 only — other SFs have data-dependent counts:
@@ -636,307 +259,3 @@ ROWS_ONLY_SELF_AUDIT: dict[str, str] = {
     "q_stream_state_metrics": "`run_evicted`: numRowsRemoved > 0 somewhere "
     "in the run — the interval bound actually evicted join state",
 }
-
-# Rows-only queries whose only hard row predates a fix or upgrade: treat
-# as unchecked so the rotation re-fronts them for a fresh row even though
-# an old rows-only row technically exists.
-_FORCE_RECHECK: frozenset[str] = frozenset(
-    {"q_ml_pca", "q_agg_approx_distinct", "q_agg_approx_percentile"}
-)
-
-# Family priority for the automatic rotation: composite/behavioral/DQ
-# shapes first within the never-checked block (hash signal on the most
-# load-bearing queries beats roundtrip smoke checks).
-_FAMILY_ORDER = (
-    "q_tpch_", "q_events_", "q_dq_", "q_curate_", "q_win_", "q_text_",
-    "q_dedup_", "q_ml_", "q_agg_", "q_join_", "q_scan_", "q_sink_",
-    "q_set_", "q_sub", "q_sim_", "q_ts_", "q_graph_", "q_stream_",
-)
-
-
-def oracle_fingerprint(spec: QuerySpec) -> str:
-    """Stable identity of the CHECK a driver row certifies: md5 of the
-    oracle SQL for SQL-oracled queries, the literal class marker for
-    rows-only ones. If a query's oracle is later rewritten, its recorded
-    fingerprint no longer matches and the rotation re-fronts it for a
-    fresh driver row (ADVICE r3: stale-verified queries must not hide in
-    the regression tail)."""
-    import hashlib
-
-    if spec.oracle is None:
-        return "rows-only"
-    return hashlib.md5(spec.oracle.encode()).hexdigest()
-
-
-def _checked_fingerprints() -> dict[str, str]:
-    """Committed snapshot mapping query name -> fingerprint AS OF the
-    round whose driver row certified it (tools/checked_fingerprints.json,
-    refreshed at round close by tools/record_fingerprints.py)."""
-    import json
-    from pathlib import Path
-
-    p = Path(__file__).resolve().parents[2] / "tools" / "checked_fingerprints.json"
-    try:
-        with open(p) as fh:
-            return dict(json.load(fh))
-    except (OSError, ValueError):
-        return {}
-
-
-def _driver_checked_queries() -> set[str]:
-    """Names with a still-valid hard driver row in ANY committed
-    CORRECTNESS_r*.json at the repo root (resolved from __file__, so
-    independent of the caller's cwd).
-
-    A row certifies a query only if it actually verified something
-    (ADVICE r3 fix — previously every artifact KEY counted):
-    - SQL-class row: ``hash_match is True`` and no error, AND the oracle
-      the driver ran is the oracle the registry declares today (recorded
-      fingerprint == current fingerprint). A rewritten oracle re-fronts
-      the query into the driver window.
-    - rows-only row: ``err == 'no_oracle'`` with a row count recorded,
-      and the query is STILL rows-only. A rows-only query that has since
-      gained a SQL oracle (q_dedup_minhash/simhash, q_pack_ffd) needs a
-      fresh, stronger hash-check row, so it does not count as checked.
-    - errored rows (tracebacks) never count.
-    """
-    import json
-    from pathlib import Path
-
-    root = Path(__file__).resolve().parents[2]
-    fps = _checked_fingerprints()
-    good_sql: set[str] = set()
-    good_rows: set[str] = set()
-    for p in sorted(root.glob("CORRECTNESS_r*.json")):
-        try:
-            with open(p) as fh:
-                data = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("hash_match") is True and row.get("err") is None:
-                good_sql.add(name)
-            elif row.get("err") == "no_oracle" and row.get("spark_rows") is not None:
-                good_rows.add(name)
-
-    checked: set[str] = set()
-    for name, spec in REGISTRY.items():
-        fp = oracle_fingerprint(spec)
-        if spec.oracle is not None:
-            if name in good_sql and fps.get(name) == fp:
-                checked.add(name)
-        else:
-            if name in good_rows or name in good_sql:
-                checked.add(name)
-    return checked
-
-
-# The CORRECTNESS artifacts are constant for the life of the process
-# (the driver writes them between rounds), and load_all() is called from
-# import-time module scopes — cache the pending set so the artifact files
-# are parsed once, not once per load_all().
-_PENDING_CACHE: dict[str, frozenset[str]] = {}
-
-
-def _force_recheck_pending(root=None) -> frozenset[str]:
-    """_FORCE_RECHECK names whose ONLY valid rows predate round 5 (their
-    stale-row round). Once a round ≥ 5 artifact records a fresh good row,
-    the force-recheck retires automatically — otherwise these three would
-    re-front forever and waste a window slot every round. ``root``
-    overrides the artifact directory (tests)."""
-    import json
-    import re
-    from pathlib import Path
-
-    cacheable = root is None  # test roots mutate between calls; never cache them
-    if root is None:
-        root = Path(__file__).resolve().parents[2]
-    root = Path(root)
-    key = str(root)
-    if cacheable and key in _PENDING_CACHE:
-        return _PENDING_CACHE[key]
-    fresh: set[str] = set()
-    for p in sorted(root.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", p.name)
-        if not m or int(m.group(1)) < 5:
-            continue
-        try:
-            with open(p) as fh:
-                data = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict) or name not in _FORCE_RECHECK:
-                continue
-            if (row.get("hash_match") is True and row.get("err") is None) or (
-                row.get("err") == "no_oracle" and row.get("spark_rows") is not None
-            ):
-                fresh.add(name)
-    pending = _FORCE_RECHECK - fresh
-    if cacheable:
-        _PENDING_CACHE[key] = pending
-    return pending
-
-
-# Driver-window size the re-certification rotation fills up to (the
-# external driver hash-checks roughly the first 50 registry entries).
-_RECERT_WINDOW = 50
-
-_VINTAGE_CACHE: dict[str, dict[str, int]] = {}
-
-
-def _certified_vintage(root=None) -> dict[str, int]:
-    """name -> LATEST round number whose committed CORRECTNESS_r*.json
-    holds a still-valid row for it (same validity rules as
-    _driver_checked_queries: green hash row with the declared oracle's
-    fingerprint still matching the recorded one, or a rows-only row for
-    a query that is still rows-only). Names with no valid row anywhere
-    are absent — they are never-checked, not old."""
-    import json
-    import re
-    from pathlib import Path
-
-    cacheable = root is None
-    if root is None:
-        root = Path(__file__).resolve().parents[2]
-    root = Path(root)
-    key = str(root)
-    if cacheable and key in _VINTAGE_CACHE:
-        return _VINTAGE_CACHE[key]
-    fps = _checked_fingerprints()
-    sql_round: dict[str, int] = {}
-    rows_round: dict[str, int] = {}
-    for p in sorted(root.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", p.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(p) as fh:
-                data = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("hash_match") is True and row.get("err") is None:
-                sql_round[name] = max(sql_round.get(name, 0), rnd)
-            elif row.get("err") == "no_oracle" and row.get("spark_rows") is not None:
-                rows_round[name] = max(rows_round.get(name, 0), rnd)
-    vintage: dict[str, int] = {}
-    for name, spec in REGISTRY.items():
-        if spec.oracle is not None:
-            if name in sql_round and fps.get(name) == oracle_fingerprint(spec):
-                vintage[name] = sql_round[name]
-        else:
-            rounds = [r for r in (sql_round.get(name), rows_round.get(name)) if r]
-            if rounds:
-                vintage[name] = max(rounds)
-    if cacheable:
-        _VINTAGE_CACHE[key] = vintage
-    return vintage
-
-
-def _recert_rotation_names(root=None) -> tuple[str, ...]:
-    """VERDICT r9 #1 — the self-maintaining re-certification rotation.
-
-    With the evidence ledger closed (every declared query holds ≥1 hard
-    external row), the window budget left over after this round's pins
-    re-fronts the OLDEST-vintage certified SQL-oracled queries,
-    oldest-first (name tie-break), so driver rows certifying
-    pre-refactor engine code (r1–r2 vintage: scan/filter/project, the
-    early join/agg/window families — refactored since under the union
-    spine, adaptive_k, globalrank and decimal disciplines) are refreshed
-    against today's code. Once the next round's artifact lands, those
-    names carry the new vintage and the selection advances to the next
-    oldest automatically — no manual re-pinning. Only SQL-oracled names
-    rotate (a repeated rows-only row re-certifies nothing hash-wise).
-    """
-    # ADVICE r10 #3: size the budget after the pins AND the never-checked
-    # (unpinned) names — both outrank the recert block in the window
-    # ordering, so ignoring them would push a future round's genuinely
-    # new queries past the ~50-entry driver window.
-    fresh = _driver_checked_queries() - _force_recheck_pending(root)
-    never = sum(
-        1 for n in REGISTRY if n not in fresh and n not in _WINDOW_PIN
-    )
-    budget = max(0, _RECERT_WINDOW - len(_WINDOW_PIN) - never)
-    vintage = _certified_vintage(root)
-    eligible = sorted(
-        (
-            n
-            for n, r in vintage.items()
-            if REGISTRY[n].oracle is not None and n not in _WINDOW_PIN
-        ),
-        key=lambda n: (vintage[n], n),
-    )
-    return tuple(eligible[:budget])
-
-
-def _rotate_for_driver(registry: dict[str, QuerySpec]) -> dict[str, QuerySpec]:
-    """SELF-MAINTAINING driver-window rotation: the external driver
-    hash-checks roughly the first 50 entries per round, so order the
-    registry (a) never-driver-checked SQL-oracled queries first
-    (family-ranked), (b) never-checked rows-only queries, then (c) the
-    already-verified regression tail in _DRIVER_PRIORITY order. Because
-    (a) is recomputed from the committed CORRECTNESS_r*.json artifacts,
-    every future round's check budget lands on fresh queries — including
-    queries added in the current round — with no manual reordering.
-    Deterministic given the repo contents."""
-    recert = _recert_rotation_names()
-    # Pinned names are force-fronted even when they hold a valid green
-    # row (r12: the pin set is "queries whose code paths changed this
-    # optimization round" — their old rows certify pre-rewrite code, so
-    # they must re-enter the window like _FORCE_RECHECK names).
-    checked = (
-        _driver_checked_queries()
-        - _force_recheck_pending()
-        - set(recert)
-        - set(_WINDOW_PIN)
-    )
-
-    pin_rank = {n: i for i, n in enumerate(_WINDOW_PIN)}
-    recert_rank = {n: i for i, n in enumerate(recert)}
-
-    def fam_rank(n: str) -> int:
-        for i, f in enumerate(_FAMILY_ORDER):
-            if n.startswith(f):
-                return i
-        return len(_FAMILY_ORDER)
-
-    def sort_key(n: str):
-        # pins first, then genuinely never-checked names (family-ranked),
-        # then the re-certification rotation (oldest vintage first) — a
-        # new query always outranks a refresh of an already-evidenced one.
-        return (
-            pin_rank.get(n, len(_WINDOW_PIN)),
-            (1, recert_rank[n], 0) if n in recert_rank else (0, 0, fam_rank(n)),
-            n,
-        )
-
-    # Pinned rows-only queries ride in the SQL block so the whole pin set
-    # lands inside the driver's ~50-query window.
-    never_sql = sorted(
-        (
-            n
-            for n, s in registry.items()
-            if n not in checked and (s.oracle is not None or n in pin_rank)
-        ),
-        key=sort_key,
-    )
-    never_rows = sorted(
-        n
-        for n, s in registry.items()
-        if n not in checked and s.oracle is None and n not in pin_rank
-    )
-    tail = [n for n in _DRIVER_PRIORITY if n in registry and n in checked]
-    tail += [
-        n
-        for n in registry
-        if n in checked and n not in tail
-    ]
-    ordered = {n: registry[n] for n in never_sql + never_rows + tail}
-    ordered.update((n, s) for n, s in registry.items() if n not in ordered)
-    return ordered

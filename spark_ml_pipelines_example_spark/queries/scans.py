@@ -927,11 +927,16 @@ def q_scan_time_travel(spark, sf_dir):
     for r in per_file:
         p = unquote(urlparse(r["f"]).path)
         stats[p] = (int(r["n"]), None if r["s"] is None else int(r["s"]))
+    if any(f not in stats for f in all_files):
+        # a manifest file the scan did not key back (a zero-row file, or a
+        # path form input_file_name() renders differently) would count as
+        # empty in the driver combine: take the distributed form instead
+        return _time_travel_distributed(spark, base, versions)
     rows = []
     for v, files in zip(versions, msets):
         n_v, s_v, any_s = 0, 0, False
         for f in files:
-            n_f, s_f = stats.get(f, (0, None))
+            n_f, s_f = stats[f]
             n_v += n_f
             if s_f is not None:
                 s_v += s_f
@@ -950,7 +955,8 @@ _I64_MAX_SNAP = (1 << 63) - 1
 
 def _time_travel_distributed(spark, base, versions):
     """The verbatim per-version union-of-aggregates form — the fallback
-    when the manifest is not driver-sized or a sum leaves int64 range."""
+    when the manifest is not driver-sized, a manifest file has no per-file
+    partial, or a sum leaves int64 range."""
     from ..sources.snapshots import read_version
 
     out = None

@@ -251,8 +251,8 @@ def q_win_frame_exclude(spark, sf_dir):
     partition hash), exact in integer cents, with the SQL-standard
     empty-frame NULL restored for single-order customers (sum over an
     empty excluded frame is NULL, not 0). One shuffle on the key at any
-    scale. HOT-KEY REMEDY (measured, tools/probe_window_skew.py +
-    BASELINE.md round-8 probe table): when q_dq_join_key_skew flags a
+    scale. HOT-KEY REMEDY (measured, BASELINE.md "Window
+    frame-exclusion under a hot key"): when q_dq_join_key_skew flags a
     dominant key, switch to q_win_frame_groups' group-collapse shape —
     the unbounded-frame algebra needs only per-key TOTALS, so a
     combinable groupBy (hot key reduced to one row map-side) plus a
@@ -927,9 +927,9 @@ def q_win_frame_exclude_modes(spark, sf_dir):
 
     Exact integer cents throughout; the empty-frame NULL is restored
     for customers whose every order shares one date. HOT-KEY REMEDY
-    (measured, tools/probe_window_skew.py + BASELINE.md round-8 probe
-    table): both grouping levels collapse to combinable groupBys +
-    broadcast join-backs (q_win_frame_groups' shape) — 1.5× faster at
+    (measured, BASELINE.md "Window frame-exclusion under a hot key"):
+    both grouping levels collapse to combinable groupBys + broadcast
+    join-backs (q_win_frame_groups' shape) — 1.5× faster at
     the 30× half-corpus hot key with equal checksums; the window plan
     stays the default on uniform keys because it saves the join."""
     o = t(spark, sf_dir, "orders").select(

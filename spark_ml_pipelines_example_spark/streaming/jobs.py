@@ -1431,6 +1431,36 @@ def streaming_tws_map_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _fold_type_totals(m: dict[str, list[int]], pdf) -> set[str]:
+    """Fold one batch of ``(event_type, cents)`` rows into ``m``
+    (event_type -> [n, cents]) and return the event types it touched.
+
+    Same totals as ``pdf.groupby("event_type")["cents"].agg(["count",
+    "sum"])``: a null event_type is dropped, a null cents is not counted
+    and adds 0. An all-int cents column takes a plain dict loop over the
+    column arrays instead of a groupby+iterrows, because the v1 runner
+    calls this once per key — ~1500 times per micro-batch at fixture
+    scale."""
+    touched: set[str] = set()
+    cents_a = pdf["cents"].to_numpy()
+    if cents_a.dtype.kind != "i":  # null cents coerced the column to float
+        g = pdf.groupby("event_type")["cents"].agg(["count", "sum"])
+        for et, (cnt, sm) in g.iterrows():
+            cur = m.setdefault(et, [0, 0])
+            cur[0] += int(cnt)
+            cur[1] += int(sm)
+            touched.add(et)
+        return touched
+    for et, c in zip(pdf["event_type"].to_numpy(), cents_a):
+        if et is None:  # groupby drops null keys
+            continue
+        cur = m.setdefault(et, [0, 0])
+        cur[0] += 1
+        cur[1] += int(c)
+        touched.add(et)
+    return touched
+
+
 def _tws_map_state_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type totals recurrence on the v1 arbitrary-stateful surface
     (``applyInPandasWithState``, no timeouts): the per-user map
@@ -1448,28 +1478,9 @@ def _tws_map_state_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
             m = {et: [int(n), int(c)] for et, n, c in zip(ets, ns, cs)}
         else:
             m = {}
-        touched = set()
-        # plain dict accumulation over the batch's column arrays: the
-        # same order-free integer sums a per-group pandas groupby would
-        # produce, without paying a groupby+iterrows per user (the v1
-        # runner calls this once per key — ~1500 times per micro-batch
-        # at fixture scale)
+        touched: set[str] = set()
         for pdf in pdfs:
-            cents_a = pdf["cents"].to_numpy()
-            if cents_a.dtype.kind != "i":  # null-coerced floats: the
-                # original groupby's null-skipping count/sum semantics
-                g = pdf.groupby("event_type")["cents"].agg(["count", "sum"])
-                for et, (cnt, sm) in g.iterrows():
-                    cur = m.setdefault(et, [0, 0])
-                    cur[0] += int(cnt)
-                    cur[1] += int(sm)
-                    touched.add(et)
-                continue
-            for et, c in zip(pdf["event_type"].to_numpy(), cents_a):
-                cur = m.setdefault(et, [0, 0])
-                cur[0] += 1
-                cur[1] += int(c)
-                touched.add(et)
+            touched |= _fold_type_totals(m, pdf)
         state.update(
             (list(m), [m[et][0] for et in m], [m[et][1] for et in m])
         )

@@ -1,9 +1,12 @@
 """Artifact-sync guards (VERDICT r4 #8): COVERAGE.md and SURVEY's
 declared counts must regenerate in the same commit as any registry
-change — these assertions fail the suite when they drift."""
+change — these assertions fail the suite when they drift. The registry
+itself reads no artifact: its order is the sorted query names."""
 
 from __future__ import annotations
 
+import builtins
+import io
 import re
 from pathlib import Path
 
@@ -67,3 +70,49 @@ def test_bench_detail_matches_headline_list():
         f"has {len(bench.HEADLINE)} — rerun python bench.py"
     )
     assert set(detail["queries"]) == set(bench.HEADLINE)
+
+
+def test_load_all_is_sorted_and_reads_no_file(monkeypatch):
+    """load_all() returns the registry in sorted-name order, whatever
+    order the query modules were imported in, and opens no file once
+    the modules are imported."""
+    load_all()
+
+    def refuse(*args, **kwargs):
+        raise AssertionError(f"load_all() touched the filesystem: {args!r}")
+
+    with monkeypatch.context() as m:
+        m.setattr(builtins, "open", refuse)
+        m.setattr(io, "open", refuse)
+        m.setattr(Path, "glob", refuse)
+        names = list(load_all())
+    assert names == sorted(REGISTRY)
+
+
+def test_rows_only_row_contract_complete():
+    """VERDICT r5 #8: the pinned row-count contract covers EXACTLY the
+    rows-only queries (a new rows-only query must declare its range; a
+    rows-only -> SQL upgrade must retire its entry), and every driver-
+    recorded rows-only count in the committed artifacts lands in range."""
+    import json
+    from pathlib import Path
+
+    from spark_ml_pipelines_example_spark.queries.registry import (
+        ROWS_ONLY_ROW_CONTRACT,
+    )
+
+    full = load_all()
+    rows_only = {n for n, s in full.items() if s.oracle is None}
+    assert set(ROWS_ONLY_ROW_CONTRACT) == rows_only
+    root = Path(__file__).resolve().parents[1]
+    for p in sorted(root.glob("CORRECTNESS_r*.json")):
+        for name, row in json.loads(p.read_text()).items():
+            if (
+                name in ROWS_ONLY_ROW_CONTRACT
+                and isinstance(row, dict)
+                and row.get("err") == "no_oracle"
+                and row.get("spark_rows") is not None
+                and full[name].oracle is None  # still rows-only today
+            ):
+                lo, hi = ROWS_ONLY_ROW_CONTRACT[name]
+                assert lo <= row["spark_rows"] <= hi, (name, p.name, row)

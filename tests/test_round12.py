@@ -178,6 +178,31 @@ def test_snapshot_queries_match_distributed_forms(spark, sf_dir):
     assert th_new and th_new == th_old
 
 
+def test_time_travel_falls_back_when_a_manifest_file_has_no_partial(
+    spark, sf_dir, monkeypatch
+):
+    """A manifest file that the per-file scan does not key back (forced
+    here by mangling the scan's path form) must send q_scan_time_travel
+    to the distributed form, not count as an empty file."""
+    from spark_ml_pipelines_example_spark.queries import scans
+    from spark_ml_pipelines_example_spark.queries.registry import load_all
+
+    reg = load_all()
+    base, versions, _, _ = scans._snapshot_demo_table(spark, sf_dir, "q_scan_time_travel")
+    distributed = scans._time_travel_distributed
+    expected = sorted(map(tuple, distributed(spark, base, versions).collect()))
+    calls = []
+
+    def spy(*args):
+        calls.append(args)
+        return distributed(*args)
+
+    monkeypatch.setattr(scans, "_time_travel_distributed", spy)
+    monkeypatch.setattr(scans, "unquote", lambda path: path + ".unkeyed")
+    got = sorted(map(tuple, reg["q_scan_time_travel"].fn(spark, sf_dir).collect()))
+    assert calls and got == expected
+
+
 def test_snapshot_build_marker_reuses_and_invalidates(spark, sf_dir):
     """r12: re-invocation reuses the committed log (same versions, same
     files — no version drift from repeated commits); a fingerprint

@@ -424,3 +424,26 @@ def test_state_reader_matches_batch_and_metadata(spark, sf_dir):
     assert row["operatorName"] == "stateStoreSave"
     assert row["numPartitions"] == 32
     assert row["minBatchId"] == 0 and row["maxBatchId"] >= row["minBatchId"]
+
+
+@pytest.mark.parametrize(
+    "cents", [[100, 250, 7, 40, 5], [100, None, 7, None, 5]], ids=["int", "null"]
+)
+def test_fold_type_totals_matches_pandas_groupby(cents):
+    """The v1 map-state fold equals a plain pandas groupby on the same
+    batch, null event_type and null cents included: both drop the null
+    key, and a null cents is not counted."""
+    import pandas as pd
+    from pandas.testing import assert_frame_equal
+
+    pdf = pd.DataFrame(
+        {"event_type": ["view", None, "buy", "view", None], "cents": cents}
+    )
+    m: dict[str, list[int]] = {}
+    touched = sjobs._fold_type_totals(m, pdf)
+    expected = pdf.groupby("event_type")["cents"].agg(["count", "sum"]).astype("int64")
+    result = pd.DataFrame.from_dict(m, orient="index", columns=["count", "sum"])
+    result = result.rename_axis("event_type").sort_index()
+    assert touched == set(expected.index)
+    assert_frame_equal(result, expected)
+

@@ -1,17 +1,18 @@
 """Simulate the external driver's correctness harness.
 
 The driver builds a VANILLA SparkSession (none of our session.py confs),
-runs the first ~50 entries of ``__spark_entry__.queries()`` at sf0.01, runs
-the matching ``oracle_sql()`` in DuckDB, and compares row count + sorted
-column names + an order-insensitive value hash. Crucially its canonicalizer
-sorts the pandas frame by all columns — which raises ``unhashable type:
-'list'`` on array cells (the r1 q_agg_collect failure) — so this simulator
-does the same to catch harness-incompatible schemas before the driver does.
+runs entries of ``__spark_entry__.queries()`` (sorted by name) at sf0.01,
+runs the matching ``oracle_sql()`` in DuckDB, and compares row count +
+sorted column names + an order-insensitive value hash. Crucially its
+canonicalizer sorts the pandas frame by all columns — which raises
+``unhashable type: 'list'`` on array cells (the r1 q_agg_collect failure) —
+so this simulator does the same to catch harness-incompatible schemas
+before the driver does.
 
-Usage: python tools/driver_sim.py [N | q_a,q_b,... | --tail [N]] [sf_dir]
-  --tail [N]  auto-pick the first N (default 50) names with no valid hard
-              driver row (rotation order minus CORRECTNESS_r* rows) — the
-              exact tail the next driver window will read.
+Usage: python tools/driver_sim.py [N | q_a,q_b,...] [sf_dir]
+  N         run the first N (default 50) registry entries
+  q_a,q_b   run only the named queries
+Per-query results go to .scratch/driver_sim.json under the repo root.
 """
 
 from __future__ import annotations
@@ -24,7 +25,8 @@ import time
 import traceback
 from decimal import Decimal
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb
 
@@ -91,43 +93,11 @@ def _value_hash(pdf):
 def main() -> None:
     only: list[str] | None = None
     limit = 50
-    tail_mode = False
     argv = list(sys.argv[1:])
-    if argv and argv[0] == "--tail":
-        # VERDICT r5 #5: pick the N never-checked names automatically
-        # (rotation order minus valid CORRECTNESS_r* rows) so the builder
-        # selfcheck fronts exactly the tail the next driver window reads.
-        argv.pop(0)
-        tail_mode = True
-        n = int(argv.pop(0)) if argv and argv[0].isdigit() else 50
-        from spark_ml_pipelines_example_spark.queries.registry import (
-            _driver_checked_queries,
-            _force_recheck_pending,
-            _recert_rotation_names,
-            load_all,
-        )
-
-        reg = load_all()
-        # subtract the re-certification rotation too (round 10+): the
-        # window the driver reads = pins + newcomers + oldest-vintage
-        # recert names, and the pre-run must front exactly that set
-        checked = (
-            _driver_checked_queries()
-            - _force_recheck_pending()
-            - set(_recert_rotation_names())
-        )
-        only = [name for name in reg if name not in checked][:n]
-        print(f"--tail {n}: {len(only)} window names selected", flush=True)
-    # ADVICE r6 #3: a q_ list after --tail must not silently replace the
-    # tail selection, and sf_dir is detected by being a directory, not by
-    # a leading slash (a relative sf_dir used to crash as int(limit)).
+    # sf_dir is detected by being a directory, not by a leading slash (a
+    # relative sf_dir used to crash as int(limit)).
     if argv and not os.path.isdir(argv[0]):
         if argv[0].startswith("q_"):  # comma-separated query names
-            if tail_mode:
-                raise SystemExit(
-                    "driver_sim: explicit query list conflicts with --tail "
-                    "(the tail already selects the names); drop one of them"
-                )
             only = argv[0].split(",")
         else:
             limit = int(argv[0])
@@ -234,8 +204,9 @@ def main() -> None:
         if not r.get("hash_match") and r.get("err") != "no_oracle"
     ]
     print(f"\n{len(results)} run, {len(fails)} FAIL: {fails}")
-    os.makedirs("/root/repo/.scratch", exist_ok=True)
-    with open("/root/repo/.scratch/driver_sim.json", "w") as f:
+    out_dir = os.path.join(ROOT, ".scratch")
+    os.makedirs(out_dir, exist_ok=True)
+    with open(os.path.join(out_dir, "driver_sim.json"), "w") as f:
         json.dump(results, f, indent=1, default=str)
     spark.stop()
     sys.exit(1 if fails else 0)
